@@ -50,7 +50,7 @@ def build_signatures(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     only its own extraction; the input's text column, when present, is the
     oracle the tests compare against — per-row invariant).  Extraction and
     signatures are fused into a single pandas UDF so the html is decoded once
-    and the text is materialized once (see make_extract_signature_udf).
+    and the text is materialized once (see make_extract_signature_packed_udf).
     """
     udf = make_extract_signature_packed_udf(cfg)
     sig = pages.select(ID, udf(F.col("html")).alias("sig")).select(
@@ -62,9 +62,7 @@ def build_signatures(pages: DataFrame, cfg: DedupConfig) -> DataFrame:
     )
     # band keys derived JVM-side from the packed minhash (codegen; identical
     # md5 formula as the oracle) — the UDF returns scalars/binaries only
-    sig = sig.withColumn(
-        "band_keys", band_keys_from_packed_expr("minhash_bin", cfg)
-    )
+    sig = sig.withColumn("band_keys", band_keys_from_packed_expr(cfg))
     sig = with_quality(sig, "text")
     sig = sig.withColumn("text_sha256", sha256_expr(F.col("text")))
     # Deliberately NO shuffle here: this stage is a pure map over the input
@@ -211,8 +209,9 @@ def run_dedupe(
         # actions on an uncached frame).  Persist rep_bands across the two
         # actions only in that regime: the frame is then ≤ target_sample
         # rows of (sid, band_keys) ≈ ≤7 MB — released right after the
-        # stage commits.  At scale the probe samples raw signatures and
-        # rep_bands stays an unpersisted one-consumer frame.
+        # stage commits, or when the probe or the stage raises.  At scale
+        # the probe samples raw signatures and rep_bands stays an
+        # unpersisted one-consumer frame.
         from image_deduplication_3m_images_spark.operators.lsh import (
             PROBE_TARGET_SAMPLE,
         )
@@ -221,22 +220,24 @@ def run_dedupe(
         probe_exact = n_sig_rows <= PROBE_TARGET_SAMPLE
         if probe_exact:
             rep_bands = rep_bands.persist()
-        bucket_profile = hot_bucket_probe(
-            signatures.select("sid", "text_sha256", "band_keys"),
-            cfg,
-            n_rows=n_sig_rows,
-            reps_df=rep_bands if probe_exact else None,
-        )
-        hint = None if bucket_profile["hot_detected"] else 0
-        cands = stage(
-            "candidate_pairs",
-            lambda: candidate_pairs(
-                rep_bands, cfg, id_col="sid", max_bucket_hint=hint
-            ),
-            extra=bucket_profile,
-        )
-        if probe_exact:
-            rep_bands.unpersist(blocking=False)
+        try:
+            bucket_profile = hot_bucket_probe(
+                signatures.select("sid", "text_sha256", "band_keys"),
+                cfg,
+                n_rows=n_sig_rows,
+                reps_df=rep_bands if probe_exact else None,
+            )
+            hint = None if bucket_profile["hot_detected"] else 0
+            cands = stage(
+                "candidate_pairs",
+                lambda: candidate_pairs(
+                    rep_bands, cfg, id_col="sid", max_bucket_hint=hint
+                ),
+                extra=bucket_profile,
+            )
+        finally:
+            if probe_exact:
+                rep_bands.unpersist(blocking=False)
 
     # Verification: the pairs table is usually tiny relative to the corpus —
     # broadcast it so the signatures side is filtered MAP-SIDE (no wide
@@ -273,7 +274,6 @@ def run_dedupe(
             signatures,
             cfg,
             id_col="sid",
-            texts_df=signatures.select("sid", "text"),
             # when pairs are broadcastable, the single-scan melt assembly
             # runs and the corpus-wide table never shuffles (see verify.py);
             # defer_containment keeps text out of the wide shuffle entirely —

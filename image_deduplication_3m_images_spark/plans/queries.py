@@ -13,7 +13,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from image_deduplication_3m_images_spark.config import DedupConfig
-from image_deduplication_3m_images_spark.functions.signatures import with_signatures
+from image_deduplication_3m_images_spark.functions.signatures import (
+    band_keys_from_packed_expr,
+    make_signature_packed_udf,
+)
 from image_deduplication_3m_images_spark.functions.text import (
     fp64_expr,
     lang_scores_expr,
@@ -198,23 +201,21 @@ def _sig(spark, sf_dir) -> DataFrame:
     a cached DataFrame plays that role.  The cache is session-bound via
     _memo, so it dies with the session (no cross-session leak).
 
-    ``band_keys`` is precomputed INTO the cache (round 6): three consumers
-    (lsh_bands, the candidate stage, its profile job) each re-derived the
-    16 md5 band keys per row from the cached minhash; materializing the
-    array once makes every explode_bands call a plain posexplode — the
-    same once-not-per-consumer rationale as the pipeline's checkpointed
-    band_keys column (identical formula, byte-equality test-pinned)."""
-    from image_deduplication_3m_images_spark.operators.lsh import band_key_expr
+    Same signature form as the pipeline's signatures table: the packed
+    ``minhash_bin`` from the same kernel, and ``band_keys`` precomputed
+    INTO the cache with the pipeline's ``band_keys_from_packed_expr``, so
+    every explode_bands call (lsh_bands, the candidate stage, its profile
+    job) is a plain posexplode."""
 
     def build():
-        sig = with_signatures(_docs(spark, sf_dir), CFG)
-        keys = F.array(
-            *[
-                band_key_expr(F.col("minhash"), b, CFG.rows_per_band)
-                for b in range(CFG.bands)
-            ]
+        sig = _docs(spark, sf_dir).select(
+            "doc_id", "text", make_signature_packed_udf(CFG)("text").alias("sig")
         )
-        return sig.withColumn("band_keys", keys).cache()
+        return (
+            sig.select("doc_id", "text", "sig.*")
+            .withColumn("band_keys", band_keys_from_packed_expr(CFG))
+            .cache()
+        )
 
     return _memo(spark, ("sig", sf_dir), build)
 
@@ -284,16 +285,26 @@ def q_lang_stats(spark, sf_dir):
 
 def q_signature_digest(spark, sf_dir):
     sig = _sig(spark, sf_dir)
+    # JVM-side unpack of the packed big-endian MinHash (values < 2**61)
+    minhash = F.expr(
+        f"transform(sequence(0, {CFG.num_perm - 1}), i -> cast(conv(hex("
+        "substring(minhash_bin, i * 8 + 1, 8)), 16, 10) as bigint))"
+    )
     return sig.select(
         "doc_id",
         F.col("n_shingles").cast("int").alias("n_shingles"),
+        minhash.alias("minhash"),
+        F.col("simhash"),
+    ).select(
+        "doc_id",
+        "n_shingles",
         F.array_min("minhash").alias("sig_min"),
         F.aggregate(
             "minhash", F.lit(0).cast("long"), lambda acc, x: acc + x
         ).alias("sig_sum"),
         F.element_at("minhash", 1).alias("sig_first"),
         F.element_at("minhash", CFG.num_perm).alias("sig_last"),
-        F.col("simhash"),
+        "simhash",
     )
 
 
@@ -365,7 +376,7 @@ def q_exact_dedup(spark, sf_dir):
 
 
 def q_lsh_bands(spark, sf_dir):
-    return explode_bands(_sig(spark, sf_dir), CFG, id_col="doc_id").select(
+    return explode_bands(_sig(spark, sf_dir), id_col="doc_id").select(
         "doc_id", F.col("band_id").cast("int").alias("band_id"), "band_key"
     )
 
@@ -383,9 +394,7 @@ def _verified(spark, sf_dir) -> DataFrame:
     def build():
         sig = _sig(spark, sf_dir)
         pairs = _cands(spark, sf_dir, sig)
-        return verify_pairs(
-            pairs, sig, CFG, id_col="doc_id", texts_df=_docs(spark, sf_dir)
-        ).cache()
+        return verify_pairs(pairs, sig, CFG, id_col="doc_id").cache()
 
     return _memo(spark, ("verified", sf_dir), build)
 
@@ -412,7 +421,6 @@ def q_containment_pairs(spark, sf_dir):
         sig,
         CFG,
         id_col="doc_id",
-        texts_df=_docs(spark, sf_dir),
         use_arrow_containment=True,
     )
     return out.select("id_a", "id_b", "containment")

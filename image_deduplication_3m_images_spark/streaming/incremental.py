@@ -571,7 +571,7 @@ def ingest_neardup_batch(
             url_bloom_fpp,
             url_bloom_max_bytes,
         )
-    bands_new = explode_bands(sig_new.select(ID, "band_keys"), cfg, id_col=ID)
+    bands_new = explode_bands(sig_new.select(ID, "band_keys"), id_col=ID)
 
     if has_old:
         sig_all = cat.read("signatures").dropDuplicates([ID]).unionByName(sig_new)
@@ -632,7 +632,6 @@ def ingest_neardup_batch(
         sig_all,
         cfg,
         id_col=ID,
-        texts_df=sig_all.select(ID, "text"),
         prefilter_broadcast=small_pairs,
     )
     new_edges = (

@@ -6,26 +6,27 @@ unlike the reference's caps at deduplication.py:314-326).
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from image_deduplication_3m_images_spark.config import DedupConfig
+from image_deduplication_3m_images_spark.functions.signatures import (
+    band_keys_from_packed_expr,
+)
 from image_deduplication_3m_images_spark.operators.cluster import connected_components
 from image_deduplication_3m_images_spark.operators.lsh import candidate_pairs
 
 CFG = DedupConfig()  # cap 64, salt_factor 8 -> salted tier up to 512
 
-SIG_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), False),
-        StructField("minhash", ArrayType(LongType(), False), False),
-    ]
-)
-
 
 def _same_sig_df(spark, n, base=0):
-    sig = [1000 + j for j in range(CFG.num_perm)]
-    return spark.createDataFrame([(base + i, sig) for i in range(n)], SIG_SCHEMA)
+    """n docs sharing one signature, hence the same key in every band.  The
+    keys are literals: the tier tests exercise bucketing, not key derivation
+    (test_band_keys_deterministic covers that)."""
+    keys = [1000 + b for b in range(CFG.bands)]
+    return spark.createDataFrame(
+        [(base + i, keys) for i in range(n)], "doc_id long, band_keys array<long>"
+    )
 
 
 def _pairs(spark, n):
@@ -64,9 +65,12 @@ def test_mega_bucket_star_only_connected(spark):
 def test_band_keys_deterministic(spark):
     from image_deduplication_3m_images_spark.operators.lsh import explode_bands
 
-    sig = _same_sig_df(spark, 3)
-    a = {(r["doc_id"], r["band_id"]): r["band_key"] for r in explode_bands(sig, CFG, "doc_id").collect()}
-    b = {(r["doc_id"], r["band_id"]): r["band_key"] for r in explode_bands(sig, CFG, "doc_id").collect()}
+    packed = np.arange(1000, 1000 + CFG.num_perm, dtype=">i8").tobytes()
+    sig = spark.createDataFrame(
+        [(i, packed) for i in range(3)], "doc_id long, minhash_bin binary"
+    ).select("doc_id", band_keys_from_packed_expr(CFG).alias("band_keys"))
+    a = {(r["doc_id"], r["band_id"]): r["band_key"] for r in explode_bands(sig, "doc_id").collect()}
+    b = {(r["doc_id"], r["band_id"]): r["band_key"] for r in explode_bands(sig, "doc_id").collect()}
     assert a == b
     # identical signatures -> identical band keys across docs
     keys0 = [a[(0, band)] for band in range(CFG.bands)]

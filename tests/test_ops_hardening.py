@@ -173,3 +173,37 @@ def test_load_spread_thresholds(spark, tmp_path, monkeypatch):
     monkeypatch.setattr(Q, "_RELATIONAL_SPREAD_ROWS", 1000)
     Q._MEMO.pop(("scan_parts", sf, "documents", False), None)
     assert Q.load(spark, sf, "documents", spread=False).rdd.getNumPartitions() > 1
+
+
+def test_run_dedupe_releases_rep_bands_when_candidate_stage_raises(
+    spark, tmp_path, monkeypatch
+):
+    """Below PROBE_TARGET_SAMPLE rows run_dedupe persists its rep_bands
+    frame across the exact probe and the candidate stage.  A failure in the
+    stage must still release it: a long-lived driver would otherwise keep
+    one dead cached frame per failed run."""
+    import pytest
+
+    from image_deduplication_3m_images_spark.config import DedupConfig
+    from image_deduplication_3m_images_spark.operators.lsh import (
+        PROBE_TARGET_SAMPLE,
+    )
+    from image_deduplication_3m_images_spark.plans import dedupe
+    from image_deduplication_3m_images_spark.sources.pages_fixture import (
+        generate_pages,
+        pages_dataframe,
+    )
+
+    n_rows = 120
+    assert n_rows <= PROBE_TARGET_SAMPLE  # the persist branch runs
+    pages = pages_dataframe(spark, generate_pages(n_rows=n_rows, seed=3))
+
+    def failing_candidate_pairs(*args, **kwargs):
+        raise RuntimeError("candidate stage failed")
+
+    monkeypatch.setattr(dedupe, "candidate_pairs", failing_candidate_pairs)
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(RuntimeError, match="candidate stage failed"):
+        dedupe.run_dedupe(spark, pages, str(tmp_path / "wh"), DedupConfig())
+    assert persistent().size() == before

@@ -1,25 +1,26 @@
-"""Packed-signature equivalence: the hot pipeline returns MinHash/band keys
-as binary cells (Arrow list-conversion costs ~4us/element — measured 55 s per
-100k docs for array<long>(128)); these tests pin byte-level equivalence with
-the array path and the JVM band-key expression.
+"""Packed-signature equivalence: MinHash leaves the kernel as ONE packed
+binary cell (Arrow list-conversion costs ~4us/element — measured 55 s per
+100k docs for array<long>(128)); these tests pin both packed UDFs byte for
+byte against the pure-Python reference ``signature_py``, the JVM band-key
+expression against the reference array formula the DuckDB oracle mirrors,
+and the packed matches kernel against an equal-position count.
 """
 
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StringType, StructField, StructType
 
 from image_deduplication_3m_images_spark.config import DedupConfig
+from image_deduplication_3m_images_spark.functions.signature_core import signature_py
 from image_deduplication_3m_images_spark.functions.signatures import (
     band_keys_from_packed_expr,
     make_extract_signature_packed_udf,
-    make_extract_signature_udf,
+    make_signature_packed_udf,
 )
-from image_deduplication_3m_images_spark.operators.lsh import band_key_expr
-from image_deduplication_3m_images_spark.operators.verify import (
-    sig_matches_expr,
-    sig_matches_packed,
-)
+from image_deduplication_3m_images_spark.operators.verify import sig_matches_packed
 from image_deduplication_3m_images_spark.sources.pages_fixture import (
     generate_pages,
     pages_dataframe,
@@ -28,114 +29,112 @@ from image_deduplication_3m_images_spark.sources.pages_fixture import (
 CFG = DedupConfig()
 
 
-def _both(spark, n=80):
-    pages = pages_dataframe(spark, generate_pages(n_rows=n, seed=5)).cache()
-    arr = pages.select(
-        "url", make_extract_signature_udf(CFG)(F.col("html")).alias("s")
-    ).select("url", "s.text", "s.n_shingles", "s.minhash", "s.simhash")
-    packed = pages.select(
-        "url", make_extract_signature_packed_udf(CFG)(F.col("html")).alias("s")
-    ).select("url", "s.text", "s.n_shingles", "s.minhash_bin", "s.simhash")
-    return arr, packed
+def band_key_expr(minhash_col, band_id: int, rows_per_band: int):
+    """Reference band key over an array<long> MinHash: 60-bit integer = md5
+    of the '_'-joined signature slice, first 15 hex chars.  Mirrored exactly
+    in the DuckDB oracle:
+    ``('0x' || substr(md5(array_to_string(slice, '_')), 1, 15))::BIGINT``.
+    """
+    lo = band_id * rows_per_band + 1  # slice() is 1-based
+    sl = F.slice(minhash_col, lo, rows_per_band)
+    joined = F.concat_ws("_", F.transform(sl, lambda x: x.cast("string")))
+    return F.conv(F.substring(F.md5(joined.cast("binary")), 1, 15), 16, 10).cast("long")
 
 
-def test_packed_minhash_bytes_equal_array(spark):
-    arr, packed = _both(spark)
-    a = {r["url"]: r for r in arr.collect()}
-    p = {r["url"]: r for r in packed.collect()}
-    assert a.keys() == p.keys()
-    for url in a:
-        assert a[url]["text"] == p[url]["text"]
-        assert a[url]["n_shingles"] == p[url]["n_shingles"]
-        assert a[url]["simhash"] == p[url]["simhash"]
-        unpacked = np.frombuffer(p[url]["minhash_bin"], dtype=">i8").tolist()
-        assert unpacked == list(a[url]["minhash"])
+@pytest.fixture(scope="module")
+def packed_rows(spark):
+    """(url, oracle_text, text, n_shingles, simhash, minhash_bin) via the
+    fused html UDF, plus the text UDF's columns over the extracted text."""
+    pages = pages_dataframe(spark, generate_pages(n_rows=80, seed=5))
+    fused = pages.select(
+        "url",
+        F.col("text").alias("oracle_text"),
+        make_extract_signature_packed_udf(CFG)(F.col("html")).alias("s"),
+    ).select("url", "oracle_text", "s.*")
+    return fused.select(
+        "*", make_signature_packed_udf(CFG)(F.col("text")).alias("t")
+    ).collect()
 
 
-def test_packed_band_keys_equal_jvm_expr(spark):
+def _unpack(b: bytes) -> list[int]:
+    return np.frombuffer(b, dtype=">i8").tolist()
+
+
+def test_packed_minhash_bytes_equal_array(packed_rows):
+    """Both packed UDFs (html input and text input) give the reference's
+    text, n_shingles, simhash and MinHash array, byte for byte."""
+    rows = packed_rows
+    assert len(rows) >= 80
+    for r in rows:
+        assert r["text"] == r["oracle_text"]
+        ref = signature_py(r["text"], CFG)
+        for sig in (r, r["t"]):
+            assert sig["n_shingles"] == ref["n_shingles"]
+            assert sig["simhash"] == ref["simhash"]
+            assert len(sig["minhash_bin"]) == 8 * CFG.num_perm
+            assert _unpack(sig["minhash_bin"]) == ref["minhash"]
+
+
+def test_packed_band_keys_equal_jvm_expr(spark, packed_rows):
     """The packed-binary band-key expression (conv/hex unpack -> md5) must
-    byte-match the array-path band_key_expr formula (which the DuckDB oracle
-    mirrors)."""
-    arr, packed = _both(spark)
-    jvm = arr.select(
+    byte-match the reference array formula over ``signature_py`` MinHash
+    arrays (the formula the DuckDB oracle mirrors)."""
+    rows = packed_rows
+    schema = StructType(
+        [
+            StructField("url", StringType(), False),
+            StructField("minhash", ArrayType(LongType(), False), False),
+        ]
+    )
+    ref = spark.createDataFrame(
+        [(r["url"], signature_py(r["text"], CFG)["minhash"]) for r in rows], schema
+    ).select(
         "url",
         F.array(
             *[band_key_expr(F.col("minhash"), b, CFG.rows_per_band) for b in range(CFG.bands)]
         ).alias("keys"),
     )
-    unp = packed.select(
-        "url",
-        band_keys_from_packed_expr(F.col("minhash_bin"), CFG).alias("keys"),
+    packed = spark.createDataFrame(
+        [(r["url"], r["minhash_bin"]) for r in rows], "url string, minhash_bin binary"
+    ).select("url", band_keys_from_packed_expr(CFG).alias("keys"))
+    a = {r["url"]: list(r["keys"]) for r in ref.collect()}
+    b = {r["url"]: list(r["keys"]) for r in packed.collect()}
+    assert len(a) == len(rows) and a == b
+
+
+def test_packed_matches_equal_array_matches(spark, packed_rows):
+    """sig_matches_packed equals the equal-position count over the
+    reference MinHash arrays on every pair, including near-duplicates."""
+    rows = packed_rows
+    sig = spark.createDataFrame(
+        [(r["url"], r["minhash_bin"]) for r in rows], "url string, minhash_bin binary"
     )
-    a = {r["url"]: list(r["keys"]) for r in jvm.collect()}
-    b = {r["url"]: list(r["keys"]) for r in unp.collect()}
-    assert a == b
-    # the single-parse SQL-string form (what the pipeline passes) must be
-    # byte-identical to the compositional Column form
-    unp_s = packed.select(
-        "url",
-        band_keys_from_packed_expr("minhash_bin", CFG).alias("keys"),
-    )
-    c = {r["url"]: list(r["keys"]) for r in unp_s.collect()}
-    assert a == c
-
-
-def test_packed_matches_equal_array_matches(spark):
-    arr, packed = _both(spark)
-    pa = arr.alias("x").crossJoin(arr.alias("y")).where(F.col("x.url") < F.col("y.url")).limit(200)
-    m1 = {
-        (r["xu"], r["yu"]): r["m"]
-        for r in pa.select(
-            F.col("x.url").alias("xu"), F.col("y.url").alias("yu"),
-            sig_matches_expr(F.col("x.minhash"), F.col("y.minhash")).alias("m"),
-        ).collect()
-    }
-    pb = packed.alias("x").crossJoin(packed.alias("y")).where(F.col("x.url") < F.col("y.url")).limit(200)
-    m2 = {
-        (r["xu"], r["yu"]): r["m"]
-        for r in pb.select(
-            F.col("x.url").alias("xu"), F.col("y.url").alias("yu"),
-            sig_matches_packed(F.col("x.minhash_bin"), F.col("y.minhash_bin")).alias("m"),
-        ).collect()
-    }
-    shared = set(m1) & set(m2)
-    assert len(shared) >= 100
-    for k in shared:
-        assert m1[k] == m2[k]
-
-def test_packed_matches_expr_equals_arrow_kernel(spark):
-    """The pure-JVM substring-equality matches expression must byte-match
-    the Arrow kernel AND the array-path expression on every pair."""
-    from image_deduplication_3m_images_spark.operators.verify import (
-        sig_matches_packed_expr,
-    )
-
-    arr, packed = _both(spark)
-    pb = (
-        packed.alias("x")
-        .crossJoin(packed.alias("y"))
+    pairs = (
+        sig.alias("x")
+        .crossJoin(sig.alias("y"))
         .where(F.col("x.url") < F.col("y.url"))
-        .limit(300)
+        .select(
+            F.col("x.url").alias("xu"),
+            F.col("y.url").alias("yu"),
+            sig_matches_packed(F.col("x.minhash_bin"), F.col("y.minhash_bin")).alias("m"),
+        )
+        .collect()
     )
-    rows = pb.select(
-        F.col("x.url").alias("xu"), F.col("y.url").alias("yu"),
-        sig_matches_packed(F.col("x.minhash_bin"), F.col("y.minhash_bin")).alias("m_udf"),
-        sig_matches_packed_expr(
-            F.col("x.minhash_bin"), F.col("y.minhash_bin"), CFG.num_perm
-        ).alias("m_expr"),
-    ).collect()
-    assert len(rows) >= 100
-    for r in rows:
-        assert r["m_udf"] == r["m_expr"], (r["xu"], r["yu"])
+    ref = {r["url"]: signature_py(r["text"], CFG)["minhash"] for r in rows}
+    assert len(pairs) == len(rows) * (len(rows) - 1) // 2
+    assert any(r["m"] >= 90 for r in pairs)  # near-dup pairs are exercised
+    for r in pairs:
+        want = sum(x == y for x, y in zip(ref[r["xu"]], ref[r["yu"]]))
+        assert r["m"] == want, (r["xu"], r["yu"])
 
 
 def test_pipeline_verify_stage_single_python_boundary(spark):
     """The verify stage's only Python is the ONE batch-vectorized Arrow
     matches kernel — hamming/containment/verdict are codegen exprs, and no
-    row-at-a-time BatchEvalPython ever appears.  (The zero-Python
+    row-at-a-time BatchEvalPython ever appears.  (A zero-Python
     expression variant was measured slower at 128 perms — see
-    sig_matches_packed_expr — so exactly one ArrowEvalPython is the
-    intended shape.)"""
+    sig_matches_packed — so exactly one ArrowEvalPython is the intended
+    shape.)"""
     from image_deduplication_3m_images_spark.config import DedupConfig
     from image_deduplication_3m_images_spark.operators.verify import verify_pairs
     from image_deduplication_3m_images_spark.plans.dedupe import build_signatures
@@ -154,7 +153,7 @@ def test_pipeline_verify_stage_single_python_boundary(spark):
     )
     out = verify_pairs(
         F.broadcast(pairs), sig, DedupConfig(), id_col="url",
-        texts_df=sig.select("url", "text"), prefilter_broadcast=True,
+        prefilter_broadcast=True,
     )
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -179,9 +178,7 @@ def test_verify_deferred_containment_equivalent_verdicts(spark):
     pages = pages_dataframe(spark, generate_pages(n_rows=200, seed=7))
     sig = build_signatures(pages, CFG).localCheckpoint(eager=True)
     pairs = candidate_pairs(sig, CFG, id_col="url").select("id_a", "id_b")
-    kw = dict(
-        id_col="url", texts_df=sig.select("url", "text"), prefilter_broadcast=True
-    )
+    kw = dict(id_col="url", prefilter_broadcast=True)
     full = verify_pairs(F.broadcast(pairs), sig, CFG, **kw).collect()
     defer = verify_pairs(
         F.broadcast(pairs), sig, CFG, defer_containment=True, **kw

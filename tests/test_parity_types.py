@@ -13,10 +13,11 @@ from __future__ import annotations
 import sys
 
 import duckdb
+import pytest
 
 sys.path.insert(0, "tools")
 
-from parity_check import canon_arrow_type, canon_spark_type, type_mismatches
+from parity_check import canon_arrow_type, canon_spark_type, table_hash, type_mismatches
 
 
 class FakeSdf:
@@ -58,3 +59,56 @@ def test_canonical_mapping_covers_catalog_types():
     }
     for name, sdt in want_spark.items():
         assert canon_spark_type(sdt) == got[name], (name, sdt, got[name])
+
+
+# Catalog queries that read the shared signatures frame (``_sig``): each is
+# checked against its DuckDB oracle at sf0.001 exactly as parity_check does
+# (row count, columns, canonical Arrow types, order-insensitive value hash).
+SIG_QUERIES = (
+    "signature_digest",
+    "lsh_bands",
+    "candidate_pairs",
+    "verified_pairs",
+    "containment_pairs",
+    "dup_clusters",
+    "simhash_pairs",
+)
+
+
+@pytest.fixture(scope="module")
+def oracle_con():
+    from parity_check import TABLES
+    from test_plans import SF
+
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{SF}/{t}.parquet'")
+    yield con
+    con.close()
+
+
+@pytest.mark.parametrize("name", SIG_QUERIES)
+def test_signature_queries_match_duckdb_oracle(spark, oracle_con, name):
+    from test_plans import SF
+
+    from image_deduplication_3m_images_spark.config import DedupConfig
+    from image_deduplication_3m_images_spark.operators.lsh import hot_bucket_stats
+    from image_deduplication_3m_images_spark.oracles import oracle_sql_map
+    from image_deduplication_3m_images_spark.plans.queries import ALL_QUERIES, _sig
+
+    # the pair oracles model full within-bucket pairs: only comparable
+    # while no bucket reaches the engine's star/salt tiers
+    cfg = DedupConfig()
+    prof = hot_bucket_stats(_sig(spark, SF), cfg, id_col="doc_id").collect()[0]
+    assert prof["max_bucket"] <= cfg.bucket_star_cap
+
+    sdf = dict(ALL_QUERIES)[name](spark, SF)
+    srows = sdf.collect()
+    atbl = oracle_con.execute(oracle_sql_map()[name]).fetch_arrow_table()
+    dcols = atbl.column_names
+    assert sorted(sdf.columns) == sorted(dcols)
+    assert type_mismatches(sdf, atbl) == []
+    assert len(srows) == atbl.num_rows and srows
+    assert table_hash(
+        sdf.columns, [[r[c] for c in sdf.columns] for r in srows]
+    ) == table_hash(dcols, [[r[c] for c in dcols] for r in atbl.to_pylist()])

@@ -20,6 +20,16 @@ from image_deduplication_3m_images_spark.sources.pages_fixture import (
 SF = "/root/testdata/sf0.001"
 
 
+def _signed(docs):
+    """(doc_id, text) -> plus the catalog's packed signature columns."""
+    from image_deduplication_3m_images_spark.functions.signatures import (
+        make_signature_packed_udf,
+    )
+
+    sig = make_signature_packed_udf(DedupConfig())("text").alias("s")
+    return docs.select("doc_id", "text", sig).select("doc_id", "text", "s.*")
+
+
 def plan_of(df) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
@@ -135,20 +145,16 @@ def test_verify_prefilter_semi_joins_before_equijoin(spark):
     item 1b) and a shuffled-hash build cannot spill (measured intermittent
     OOM on the 4 GB single-executor scaling leg).
     """
-    from image_deduplication_3m_images_spark.config import DedupConfig
-    from image_deduplication_3m_images_spark.functions.signatures import (
-        with_signatures,
-    )
     from image_deduplication_3m_images_spark.operators.verify import verify_pairs
 
     from pyspark.sql import functions as F
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    sig = with_signatures(docs, DedupConfig())
+    sig = _signed(docs)
     pairs = spark.createDataFrame([(0, 1), (2, 3)], ["id_a", "id_b"])
     out = verify_pairs(
         F.broadcast(pairs), sig, DedupConfig(), id_col="doc_id",
-        texts_df=docs, prefilter_broadcast=True,
+        prefilter_broadcast=True,
     )
     plan = plan_of(out)
     # melt shape: the corpus is scanned ONCE (exactly one parquet scan node
@@ -183,12 +189,9 @@ def test_hamming_block_pairs_single_shuffle_small_tier(spark):
     from image_deduplication_3m_images_spark.operators.dedup import (
         simhash_block_pairs,
     )
-    from image_deduplication_3m_images_spark.functions.signatures import (
-        with_signatures,
-    )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select("doc_id", "text")
-    sig = with_signatures(docs, DedupConfig()).cache()
+    sig = _signed(docs).cache()
     try:
         sig.count()  # materialize so the tier branches share one input scan
         plan = plan_of(simhash_block_pairs(sig, DedupConfig(), id_col="doc_id"))
