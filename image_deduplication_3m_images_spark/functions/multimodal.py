@@ -166,25 +166,18 @@ def sample_frames(media: DataFrame, every_k: int = 10, max_frames: int = 32) -> 
     return media.mapInPandas(kernel, FRAME_SAMPLE_SCHEMA)
 
 
-def media_dedup_candidates(
-    features: DataFrame, radius: int = 3, max_bucket_hint: int | None = None
-) -> DataFrame:
+def media_dedup_candidates(features: DataFrame, radius: int = 3) -> DataFrame:
     """Perceptual-hash near-dup candidates within Hamming ``radius`` — the
     image analog of the text pipeline's LSH bucket join, via the same
     pigeonhole chunk blocking the SimHash operator uses (reference analog:
     LSH over wavelet hashes, /root/reference/modules/deduplication.py:270-283).
     Returns (id_a, id_b, hamming); radius=0 degrades to exact-phash pairs.
-    ``max_bucket_hint`` forwards the profile statistic that lets clean
-    corpora skip the skew tiers (see operators.dedup.hamming_bucket_stats).
     """
     from image_deduplication_3m_images_spark.operators.dedup import (
         hamming_block_pairs,
     )
 
-    return hamming_block_pairs(
-        features, "phash64", "media_id", radius=radius,
-        max_bucket_hint=max_bucket_hint,
-    )
+    return hamming_block_pairs(features, "phash64", "media_id", radius=radius)
 
 
 def media_from_documents(docs: DataFrame, id_col: str = "doc_id",

@@ -19,6 +19,7 @@ from image_deduplication_3m_images_spark.functions.text import (
     tokens_expr,
     word_ngrams_window_expr,
 )
+from image_deduplication_3m_images_spark.operators.lsh import bucket_pairs
 
 
 def exact_duplicates(df: DataFrame, id_col: str, text_col: str = "text") -> DataFrame:
@@ -42,11 +43,8 @@ def exact_duplicates(df: DataFrame, id_col: str, text_col: str = "text") -> Data
 
 
 def _hamming_chunks_expr(hash_col: str, radius: int):
-    """THE pigeonhole chunk layout, shared by the profile and the operator:
-    radius+1 chunks covering all 64 bits (last chunk takes the remaining
-    high bits).  One definition — a divergence between the profile's and
-    the operator's layout would let a stale ``max_bucket_hint`` disable the
-    skew guard on a bucket the operator actually builds."""
+    """THE pigeonhole chunk layout: radius+1 chunks covering all 64 bits
+    (last chunk takes the remaining high bits)."""
     n_chunks = radius + 1
     width = 64 // n_chunks
 
@@ -63,28 +61,9 @@ def _hamming_chunks_expr(hash_col: str, radius: int):
     return F.array(*[chunk_expr(i) for i in range(n_chunks)])
 
 
-def hamming_bucket_stats(
-    df: DataFrame, hash_col: str, radius: int = 3
-) -> DataFrame:
-    """Chunk-bucket profile for the pigeonhole blocking below: one row with
-    the max bucket size.  Callers pass it to ``hamming_block_pairs`` as
-    ``max_bucket_hint`` so clean corpora skip the tier machinery entirely
-    (the same stats-driven plan choice as ``operators/lsh.py``; the profile
-    doubles as the lineage/metrics record, so skew handling is never
-    silent)."""
-    df = df.where(F.col(hash_col).isNotNull())
-    chunks = _hamming_chunks_expr(hash_col, radius)
-    return (
-        df.select(F.posexplode(chunks).alias("chunk_id", "chunk"))
-        .groupBy("chunk_id", "chunk")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("max_bucket"))
-    )
-
-
 def hamming_block_pairs(
     df: DataFrame, hash_col: str, id_col: str, radius: int = 3,
-    bucket_cap: int = 256, max_bucket_hint: int | None = None,
+    bucket_cap: int = 256,
 ) -> DataFrame:
     """Candidate pairs within Hamming ``radius`` of a 64-bit hash column, by
     pigeonhole chunk blocking: hamming <= h implies at least one of h+1
@@ -93,23 +72,12 @@ def hamming_block_pairs(
     Exact bit_count filter afterwards removes chunk-collision false
     positives.  Returns (id_a, id_b, hamming), distinct, hamming <= radius.
 
-    Scale shape (same single-shuffle pattern that halved candidate_pairs in
-    the LSH operator, lsh.py:92-134): one explode (x(h+1) rows of (id,
-    16ish-bit chunk, hash)), ONE hash-shuffle into groupBy(chunk_id, chunk)
-    with a size-bounded collect_list of (id, hash) structs, pairs expanded
-    map-side by a codegen'd array expression.  Buckets over ``bucket_cap``
-    (degenerate corpora — e.g. thousands of all-zero hashes) skip the
-    collect and take an exact self-join restricted to those keys instead:
-    unlike LSH starring, Hamming semantics need EVERY qualifying pair, so
-    the hot tier trades the second shuffle for bounded executor memory
-    rather than dropping pairs.  The tier split is driven by a
-    map-side-combined (key, count) aggregate — tiny bytes.
-
-    ``max_bucket_hint``: caller-supplied profile statistic (see
-    ``hamming_bucket_stats``).  When it proves no bucket exceeds
-    ``bucket_cap``, the stats shuffle + tier join + branch union are
-    skipped entirely — one groupBy, one pair expansion (the same
-    statistics-driven plan selection ``candidate_pairs`` uses).
+    Scale shape: one explode (x(h+1) rows of (id, 16ish-bit chunk, hash)),
+    then the ``bucket_pairs`` operator (``operators/lsh.py``) over
+    (chunk_id, chunk) with (id, hash) struct members in exact mode:
+    buckets over ``bucket_cap`` (degenerate corpora — e.g. thousands of
+    all-zero hashes) take an exact self-join instead of a collect, because
+    Hamming semantics need EVERY qualifying pair.
     """
     if radius < 0:
         raise ValueError(f"radius must be >= 0, got {radius}")
@@ -118,79 +86,18 @@ def hamming_block_pairs(
     # all land in ONE unbounded collect_list) and their pairs are discarded
     # by the bit_count filter anyway — drop them up front
     df = df.where(F.col(hash_col).isNotNull())
-    chunks = _hamming_chunks_expr(hash_col, radius)
     blocks = df.select(
         F.col(id_col), F.col(hash_col).alias("h"),
-        F.posexplode(chunks).alias("chunk_id", "chunk"),
+        F.posexplode(_hamming_chunks_expr(hash_col, radius)).alias("chunk_id", "chunk"),
     )
-
-    # small buckets: collect_list bounded by bucket_cap, pairs expanded by a
-    # codegen'd (i < j) array expression — sort_array on (id, h) structs
-    # orders by id, so id_a < id_b holds by construction
-    members = F.sort_array(
-        F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("h")))
-    ).alias("members")
-    ms = F.col("members")
-
-    def _expand(grouped: DataFrame) -> DataFrame:
-        return grouped.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        ms,
-                        lambda x, i: F.transform(
-                            F.slice(ms, i + 2, F.size(ms)),
-                            lambda y: F.struct(
-                                x["id"].alias("id_a"),
-                                x["h"].alias("h_a"),
-                                y["id"].alias("id_b"),
-                                y["h"].alias("h_b"),
-                            ),
-                        ),
-                    )
-                )
-            ).alias("p")
-        ).select("p.id_a", "p.h_a", "p.id_b", "p.h_b")
-
-    if max_bucket_hint is not None and max_bucket_hint <= bucket_cap:
-        # profile-proven clean corpus: one shuffle, no tier machinery
-        pairs = _expand(blocks.groupBy("chunk_id", "chunk").agg(members))
-        return pairs.select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).alias("hamming"),
-        ).where(F.col("hamming") <= radius).dropDuplicates(["id_a", "id_b"])
-
-    stats = blocks.groupBy("chunk_id", "chunk").agg(
-        F.count(F.lit(1)).alias("bucket_size")
-    ).where(F.col("bucket_size") > bucket_cap)
-    tiered = blocks.join(stats, ["chunk_id", "chunk"], "left")
-
-    small_pairs = _expand(
-        tiered.where(F.col("bucket_size").isNull())
-        .groupBy("chunk_id", "chunk")
-        .agg(members)
-    )
-
-    hot = tiered.where(F.col("bucket_size").isNotNull())
-    a = hot.select(
-        "chunk_id", "chunk", F.col(id_col).alias("id_a"), F.col("h").alias("h_a")
-    )
-    b = hot.select(
-        "chunk_id", "chunk", F.col(id_col).alias("id_b"), F.col("h").alias("h_b")
-    )
-    hot_pairs = (
-        a.join(b, ["chunk_id", "chunk"])
-        .where(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "h_a", "id_b", "h_b")
-    )
-
+    # sort_array on (id, h) structs orders by id, so id_a < id_b
+    member = F.struct(F.col(id_col).alias("id"), F.col("h"))
+    pairs = bucket_pairs(blocks, ["chunk_id", "chunk"], member, bucket_cap)
     return (
-        small_pairs.unionByName(hot_pairs)
-        .select(
-            "id_a",
-            "id_b",
-            F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b"))).alias("hamming"),
+        pairs.select(
+            F.col("a.id").alias("id_a"),
+            F.col("b.id").alias("id_b"),
+            F.bit_count(F.col("a.h").bitwiseXOR(F.col("b.h"))).alias("hamming"),
         )
         .where(F.col("hamming") <= radius)
         .dropDuplicates(["id_a", "id_b"])
@@ -198,19 +105,14 @@ def hamming_block_pairs(
 
 
 def simhash_block_pairs(
-    sig_df: DataFrame, cfg: DedupConfig, id_col: str = "doc_id",
-    max_bucket_hint: int | None = None,
+    sig_df: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
 ) -> DataFrame:
     """SimHash near-dup candidates: Hamming <= ``cfg.hamming_max`` via
     (hamming_max+1)-chunk pigeonhole blocking (see hamming_block_pairs).
     The radius comes from the config — hard-coding 3 here made the
     ``hamming_max`` knob a silent no-op for this operator while verify.py
-    honored it.  ``max_bucket_hint`` forwards the profile statistic that
-    lets clean corpora skip the skew tiers (see hamming_bucket_stats)."""
-    return hamming_block_pairs(
-        sig_df, "simhash", id_col, radius=cfg.hamming_max,
-        max_bucket_hint=max_bucket_hint,
-    )
+    honored it."""
+    return hamming_block_pairs(sig_df, "simhash", id_col, radius=cfg.hamming_max)
 
 
 def ngram_jaccard_pairs(

@@ -7,11 +7,13 @@ the shuffle on ``(band_id, band_key)`` *is* the LSH index; skewed ("hot")
 buckets emit star edges to the bucket representative instead of O(n^2) pairs,
 which preserves connectivity exactly (never silently drops a component link,
 unlike the reference's cap) while bounding pair count linearly in bucket size.
+That bucketing is ``bucket_pairs``, the one blocking operator: Hamming
+(SimHash, phash) and substring blocking call it too.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from image_deduplication_3m_images_spark.config import DedupConfig
@@ -29,132 +31,154 @@ def explode_bands(sig_df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     )
 
 
-def _bucket_pairs_expr(ids):
-    """All (i < j) pairs from a SORTED id array as a codegen'd expression:
-    for each element x at index i, pair it with every later element.  Input
-    arrays are bounded by the tier caps, so the output per row is bounded
-    (cap=64 -> <= 2016 pairs)."""
-    n = F.size(ids)
+def _bucket_pairs_expr(ms):
+    """All (i < j) pairs from a SORTED member array as a codegen'd
+    expression: for each element x at index i, pair it with every later
+    element.  Input arrays are bounded by the tier caps, so the output per
+    row is bounded (cap=64 -> <= 2016 pairs)."""
+    n = F.size(ms)
     return F.flatten(
         F.transform(
-            ids,
+            ms,
             lambda x, i: F.transform(
-                F.slice(ids, i + 2, n),
-                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
+                F.slice(ms, i + 2, n),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
             ),
         )
     )
 
 
-def _explode_bucket_pairs(grouped: DataFrame) -> DataFrame:
-    """(band_id, ids: sorted array) -> (band_id, band_key, id_a, id_b)."""
-    return grouped.select(
-        "band_id",
-        "band_key",
-        F.explode(_bucket_pairs_expr(F.col("ids"))).alias("p"),
-    ).select("band_id", "band_key", "p.id_a", "p.id_b")
+def bucket_pairs(
+    rows: DataFrame,
+    keys: list[str],
+    member: str | Column,
+    cap: int,
+    salt_factor: int | None = None,
+    max_bucket_hint: int | None = None,
+) -> DataFrame:
+    """The skew-aware blocking operator: bucket ``rows`` by ``keys`` and
+    emit the member pairs inside each bucket.  Returns (*keys, a, b) with
+    a < b; a pair may repeat within a key (star edges beside salted
+    sub-buckets, repeated rows in a hot bucket), so callers dedupe.
+
+    ``member`` is a column name or an orderable Column — a bare id for LSH
+    and substring blocking, ``struct(id, hash)`` for Hamming blocking.
+
+    Physical shape: ONE shuffle of the rows into a groupBy(keys) with a
+    sorted collect_list, then pairs are expanded map-side by a codegen'd
+    array expression — vs the naive self-join, this halves the shuffled
+    bytes (the rows move once, not twice as both join sides) and replaces
+    the hash-probe with array iteration.  collect_list is safe ONLY because
+    every grouped tier is size-bounded (below); hot buckets never collect
+    whole.
+
+    Tiers by bucket size (hot buckets detected with a map-side-combined
+    groupBy of (keys, count, min) — tiny bytes — joined back broadcast
+    under AQE; nothing is persisted, so repeated calls leave no cached
+    blocks behind):
+      * size <= cap: all pairs, collect_list bounded by ``cap``;
+      * size > cap, ``salt_factor=None``: all pairs by an exact self-join
+        restricted to the hot keys — for callers whose result is the pair
+        set itself (Hamming radius, exact substring);
+      * size > cap, ``salt_factor=S``: connectivity only.  Up to cap*S,
+        SALTED sub-buckets — deterministic salt in [0, S), all pairs only
+        within (keys, salt), ~cap members per collect_list — and above it
+        no grouping at all; either way PLUS a star edge from every member
+        to the bucket min, so cross-salt and mega-bucket connectivity is
+        exact at O(n) edges.  (The reference silently
+        DROPPED pairs past its caps, deduplication.py:314-326; no tier here
+        loses a component link.)
+
+    ``max_bucket_hint``: a caller-supplied bucket-profile statistic (see
+    ``max_bucket_size``).  When it proves no bucket exceeds ``cap``, the
+    stats shuffle, tier join and branch union are skipped entirely — one
+    groupBy, one pair expansion (statistics-driven plan selection).
+    """
+    m = F.col(member) if isinstance(member, str) else member
+
+    def grouped_pairs(df: DataFrame, by: list[str]) -> DataFrame:
+        # array_distinct: a member repeated in a bucket (e.g. a doc id on
+        # two input rows) must not pair with itself
+        ms = F.array_distinct(F.sort_array(F.collect_list(m)))
+        return (
+            df.groupBy(*by)
+            .agg(ms.alias("_ms"))
+            .select(*keys, F.explode(_bucket_pairs_expr(F.col("_ms"))).alias("_p"))
+            .select(*keys, "_p.a", "_p.b")
+        )
+
+    if max_bucket_hint is not None and max_bucket_hint <= cap:
+        return grouped_pairs(rows, keys)
+
+    stats = (
+        rows.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("_n"), F.min(m).alias("_min"))
+        .where(F.col("_n") > cap)
+    )
+    tiered = rows.join(stats, keys, "left")
+    pairs = grouped_pairs(tiered.where(F.col("_n").isNull()), keys)
+    hot = tiered.where(F.col("_n").isNotNull())
+
+    if salt_factor is None:
+        hot = hot.select(*keys, m.alias("_m"))
+        return pairs.unionByName(
+            hot.select(*keys, F.col("_m").alias("a"))
+            .join(hot.select(*keys, F.col("_m").alias("b")), keys)
+            .where(F.col("a") < F.col("b"))
+        )
+
+    salted = hot.where(F.col("_n") <= cap * salt_factor).withColumn(
+        "_salt", F.pmod(F.xxhash64(m), F.lit(salt_factor))
+    )
+    star = hot.where(m != F.col("_min")).select(
+        *keys, F.col("_min").alias("a"), m.alias("b")
+    )
+    return pairs.unionByName(grouped_pairs(salted, [*keys, "_salt"])).unionByName(
+        star
+    )
+
+
+def max_bucket_size(rows: DataFrame, keys: list[str]) -> int:
+    """The bucket profile behind ``max_bucket_hint``: the largest number of
+    rows sharing one ``keys`` value (0 for no rows) — one job."""
+    row = (
+        rows.groupBy(*keys)
+        .agg(F.count(F.lit(1)).alias("n"))
+        .agg(F.max("n").alias("m"))
+        .collect()[0]
+    )
+    return int(row["m"] or 0)
 
 
 def candidate_pairs(
     sig_df: DataFrame,
     cfg: DedupConfig,
     id_col: str = "doc_id",
-    count_bands: bool = True,
     max_bucket_hint: int | None = None,
 ) -> DataFrame:
-    """Band-bucket grouping -> distinct candidate pairs (a < b).
-
-    Physical shape: ONE shuffle of the exploded (id, band) rows into a
-    groupBy(band_id, band_key) with a size-bounded collect_list, then pairs
-    are expanded map-side by a codegen'd array expression — vs the naive
-    self-join, this halves the shuffled bytes (the exploded frame moves
-    once, not twice as both join sides) and replaces the hash-probe with
-    array iteration.  collect_list is safe ONLY because every grouped tier
-    is size-bounded (see below); the unbounded mega tier never collects.
+    """Band-bucket grouping -> distinct candidate pairs (a < b): the
+    ``bucket_pairs`` operator over (band_id, band_key) with the salted
+    connectivity tiers (cap ``bucket_star_cap``, ``salt_factor``).
 
     ``max_bucket_hint``: caller-supplied bucket-profile statistic (the
-    pipeline computes it for lineage anyway).  When it proves no bucket
-    exceeds the star cap, the skew machinery is skipped entirely —
-    statistics-driven plan selection.
-
-    Skew handling (the north rule's explicit requirement), three tiers by
-    bucket size (hot buckets detected with a map-side-combined groupBy of
-    (key, count, min) — tiny bytes — joined back broadcast under AQE;
-    nothing is persisted, so repeated calls leave no cached blocks behind):
-      * size <= cap:                 full within-bucket pairs (a < b),
-        collect_list bounded by cap;
-      * cap < size <= cap*salt:      SALTED-KEY sub-buckets — deterministic
-        salt in [0, salt_factor); full pairs only within (band, key, salt)
-        (collect_list bounded by the bucket cap), PLUS star edges to the
-        bucket min so cross-salt connectivity is exact;
-      * size > cap*salt (mega-hot):  star edges only — O(n) map-side edges
-        that keep every member connected for clustering; never collected.
-        (The reference silently DROPPED pairs past its caps,
-        deduplication.py:314-326; no tier here loses a component link.)
+    pipeline computes it for lineage anyway); see ``bucket_pairs``.
 
     Returns (id_a, id_b, n_bands) with id_a < id_b, distinct.
     """
-    flat = explode_bands(sig_df, id_col)
-    if max_bucket_hint is not None and max_bucket_hint <= cfg.bucket_star_cap:
-        grouped = flat.groupBy("band_id", "band_key").agg(
-            F.sort_array(F.collect_list(id_col)).alias("ids")
-        )
-        pairs = _explode_bucket_pairs(grouped)
-        if count_bands:
-            return pairs.groupBy("id_a", "id_b").agg(
-                F.count_distinct("band_id").alias("n_bands")
-            )
-        return pairs.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
-
-    salt_max = cfg.bucket_star_cap * cfg.salt_factor
-    hot_stats = (
-        flat.groupBy("band_id", "band_key")
-        .agg(
-            F.count(F.lit(1)).alias("bucket_size"),
-            F.min(id_col).alias("bucket_min"),
-        )
-        .where(F.col("bucket_size") > cfg.bucket_star_cap)
+    pairs = bucket_pairs(
+        explode_bands(sig_df, id_col),
+        ["band_id", "band_key"],
+        id_col,
+        cfg.bucket_star_cap,
+        cfg.salt_factor,
+        max_bucket_hint,
     )
-    bands = flat.join(hot_stats, ["band_id", "band_key"], "left")
-
-    small = bands.where(F.col("bucket_size").isNull())
-    small_pairs = _explode_bucket_pairs(
-        small.groupBy("band_id", "band_key").agg(
-            F.sort_array(F.collect_list(id_col)).alias("ids")
-        )
+    # renamed before the groupBy, so its exchange keys are (id_a, id_b)
+    return (
+        pairs.withColumnsRenamed({"a": "id_a", "b": "id_b"})
+        .groupBy("id_a", "id_b")
+        .agg(F.count_distinct("band_id").alias("n_bands"))
     )
-
-    medium = bands.where(
-        F.col("bucket_size").isNotNull() & (F.col("bucket_size") <= salt_max)
-    ).withColumn(
-        "salt",
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(cfg.salt_factor)),
-    )
-    medium_pairs = _explode_bucket_pairs(
-        medium.groupBy("band_id", "band_key", "salt").agg(
-            F.sort_array(F.collect_list(id_col)).alias("ids")
-        )
-    )
-
-    hot_pairs = (
-        bands.where(
-            F.col("bucket_size").isNotNull()
-            & (F.col(id_col) != F.col("bucket_min"))
-        )
-        .select(
-            F.col("band_id"),
-            F.col("band_key"),
-            F.col("bucket_min").alias("id_a"),
-            F.col(id_col).alias("id_b"),
-        )
-    )
-
-    pairs = small_pairs.unionByName(medium_pairs).unionByName(hot_pairs)
-    if count_bands:
-        return pairs.groupBy("id_a", "id_b").agg(
-            F.count_distinct("band_id").alias("n_bands")
-        )
-    return pairs.select("id_a", "id_b").dropDuplicates(["id_a", "id_b"])
 
 
 # largest bucket the fast path is allowed to absorb undetected: C(4096, 2)
@@ -238,14 +262,9 @@ def hot_bucket_probe(
         reps = s.groupBy(sha_col).agg(
             F.min(id_col).alias(id_col), F.first("band_keys").alias("band_keys")
         )
-    row = (
-        explode_bands(reps, id_col)
-        .groupBy("band_id", "band_key")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .agg(F.max("n").alias("m"))
-        .collect()[0]
+    sample_max = max_bucket_size(
+        explode_bands(reps, id_col), ["band_id", "band_key"]
     )
-    sample_max = int(row["m"] or 0)
     # integer evidence floor (ADVICE r5): past ~3.2M rows the threshold
     # cap*fraction drops below 1, so ANY sampled 2-member bucket flagged
     # hot and the probe degenerated to always-hot at scale.  Requiring
@@ -258,22 +277,3 @@ def hot_bucket_probe(
         "sample_max_bucket": sample_max,
         "hot_detected": bool(hot),
     }
-
-
-def hot_bucket_stats(sig_df: DataFrame, cfg: DedupConfig, id_col: str = "doc_id") -> DataFrame:
-    """Band-bucket size profile for lineage/metrics (never silent truncation —
-    reference analog: the uninstrumented bucket skip at deduplication.py:314-317).
-    """
-    return (
-        explode_bands(sig_df, id_col)
-        .groupBy("band_id", "band_key")
-        .agg(F.count(F.lit(1)).alias("bucket_size"))
-        .groupBy()
-        .agg(
-            F.count(F.lit(1)).alias("n_buckets"),
-            F.max("bucket_size").alias("max_bucket"),
-            F.sum((F.col("bucket_size") > cfg.bucket_star_cap).cast("long")).alias(
-                "n_hot_buckets"
-            ),
-        )
-    )

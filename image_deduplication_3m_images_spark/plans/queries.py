@@ -45,7 +45,7 @@ from image_deduplication_3m_images_spark.operators.dedup import (
 from image_deduplication_3m_images_spark.operators.lsh import (
     candidate_pairs,
     explode_bands,
-    hot_bucket_stats,
+    max_bucket_size,
 )
 from image_deduplication_3m_images_spark.operators.similarity import (
     brute_force_topk,
@@ -241,9 +241,9 @@ def _memo(spark, key: tuple, build):
 
 
 def _cands(spark, sf_dir, sig=None) -> DataFrame:
-    """Candidate pairs with the stats-driven fast path: compute the bucket
-    profile once (the pipeline logs it to lineage anyway) and pass it as
-    max_bucket_hint so skew-free inputs skip the 3-tier plan entirely.
+    """Candidate pairs with the stats-driven fast path: compute the max
+    bucket size once and pass it as max_bucket_hint so skew-free inputs
+    skip the 3-tier plan entirely.
     Memoized + cached per (session, sf_dir) like ``_sig``: four catalog
     queries (candidate_pairs, verified_pairs, containment_pairs,
     ngram_jaccard) consume the same pair stage over immutable testdata, and
@@ -253,7 +253,9 @@ def _cands(spark, sf_dir, sig=None) -> DataFrame:
     sig = sig if sig is not None else _sig(spark, sf_dir)
 
     def build():
-        hint = hot_bucket_stats(sig, CFG, id_col="doc_id").collect()[0]["max_bucket"]
+        hint = max_bucket_size(
+            explode_bands(sig, id_col="doc_id"), ["band_id", "band_key"]
+        )
         return candidate_pairs(
             sig, CFG, id_col="doc_id", max_bucket_hint=hint
         ).cache()
@@ -685,24 +687,9 @@ def q_length_quantiles(spark, sf_dir):
 
 
 def q_simhash_pairs(spark, sf_dir):
-    """Stats-driven fast path like ``_cands``: one profile job (memoized —
-    the pipeline logs the same statistic to lineage) proves the chunk
-    buckets are skew-free, and the operator then plans ONE shuffle instead
-    of the stats-join + three-branch tier union."""
-    from image_deduplication_3m_images_spark.operators.dedup import (
-        hamming_bucket_stats,
+    return simhash_block_pairs(_sig(spark, sf_dir), CFG, id_col="doc_id").select(
+        "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
     )
-
-    sig = _sig(spark, sf_dir)
-    hint = _memo(
-        spark,
-        ("simhash_hint", sf_dir),
-        lambda: hamming_bucket_stats(sig, "simhash", radius=CFG.hamming_max)
-        .collect()[0]["max_bucket"],
-    )
-    return simhash_block_pairs(
-        sig, CFG, id_col="doc_id", max_bucket_hint=hint
-    ).select("id_a", "id_b", F.col("hamming").cast("int").alias("hamming"))
 
 
 def q_ngram_jaccard(spark, sf_dir):
@@ -996,23 +983,12 @@ def q_media_dedup(spark, sf_dir):
         media_dedup_candidates,
     )
 
-    from image_deduplication_3m_images_spark.operators.dedup import (
-        hamming_bucket_stats,
-    )
-
     feats = _memo(
         spark,
         ("media_feats", sf_dir),
         lambda: image_features(_media(spark, sf_dir)).cache(),
     )
-    # stats-driven fast path, same shape as q_simhash_pairs
-    hint = _memo(
-        spark,
-        ("media_hint", sf_dir),
-        lambda: hamming_bucket_stats(feats, "phash64", radius=3)
-        .collect()[0]["max_bucket"],
-    )
-    return media_dedup_candidates(feats, radius=3, max_bucket_hint=hint).select(
+    return media_dedup_candidates(feats, radius=3).select(
         "id_a", "id_b", F.col("hamming").cast("int").alias("hamming")
     )
 

@@ -13,6 +13,12 @@ import os
 from pyspark.sql import SparkSession
 
 
+def _local_driver_memory() -> str:
+    """Half the host's RAM, at most 48g."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(48 * 1024, ram_mb // 2)}m"
+
+
 def get_spark(
     app_name: str = "image_deduplication_3m_images_spark",
     cores: int | None = None,
@@ -67,13 +73,18 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", str(32 * 1024 * 1024))
         .config("spark.hadoop.parquet.block.size", str(32 * 1024 * 1024))
         # local mode puts all executor threads in the driver JVM: size the heap
-        # for the box (128 GiB here), not for a remote driver — an undersized
-        # heap makes 32 threads GC-thrash and *anti*-scale.  In local-cluster
-        # mode executors are separate JVMs, so the driver stays small and
-        # each executor gets its own heap.
+        # for the box, not for a remote driver — an undersized heap makes 32
+        # threads GC-thrash and *anti*-scale.  Half the host's RAM, at most
+        # 48g: G1 grows the heap toward its cap rather than collect, so a
+        # larger cap on a small host outgrows physical memory and the OOM
+        # killer takes the JVM.  In local-cluster mode executors are
+        # separate JVMs, so the driver stays small and each executor gets
+        # its own heap.
         .config(
             "spark.driver.memory",
-            os.environ.get("SPARK_DRIVER_MEMORY", "8g" if multi_jvm else "48g"),
+            os.environ.get(
+                "SPARK_DRIVER_MEMORY", "8g" if multi_jvm else _local_driver_memory()
+            ),
         )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

@@ -93,32 +93,6 @@ def test_hamming_hot_bucket_tier_is_exact(spark):
     assert got == expected
 
 
-def test_hamming_fast_path_equals_tiered(spark):
-    """The stats-driven fast path (max_bucket_hint <= bucket_cap) must emit
-    exactly the tiered plan's pairs, with a join-free single-grouping plan
-    (round-6 optimization: one shuffle instead of stats-join + tier union)."""
-    import io
-    from contextlib import redirect_stdout
-
-    from image_deduplication_3m_images_spark.operators.dedup import (
-        hamming_bucket_stats,
-    )
-
-    rows = [(i, (i % 5) << 7) for i in range(40)] + [(100, 3), (101, 1)]
-    df = spark.createDataFrame(rows, "id long, h long")
-    hint = hamming_bucket_stats(df, "h", radius=3).collect()[0]["max_bucket"]
-    assert hint is not None and hint <= 256
-    fast = hamming_block_pairs(df, "h", "id", radius=3, max_bucket_hint=hint)
-    tiered = hamming_block_pairs(df, "h", "id", radius=3)
-    key = lambda r: (r["id_a"], r["id_b"], r["hamming"])  # noqa: E731
-    assert sorted(map(key, fast.collect())) == sorted(map(key, tiered.collect()))
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        fast.explain("formatted")
-    plan = buf.getvalue()
-    assert "Join" not in plan, plan[:2000]
-
-
 def test_signlsh_neardup_cache_buckets_single_kernel_pass(spark):
     """cache_buckets=True must return the identical pair set while reading
     the bucketed projection from cache on both self-join sides (one bucket

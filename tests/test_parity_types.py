@@ -92,15 +92,18 @@ def test_signature_queries_match_duckdb_oracle(spark, oracle_con, name):
     from test_plans import SF
 
     from image_deduplication_3m_images_spark.config import DedupConfig
-    from image_deduplication_3m_images_spark.operators.lsh import hot_bucket_stats
+    from image_deduplication_3m_images_spark.operators.lsh import (
+        explode_bands,
+        max_bucket_size,
+    )
     from image_deduplication_3m_images_spark.oracles import oracle_sql_map
     from image_deduplication_3m_images_spark.plans.queries import ALL_QUERIES, _sig
 
     # the pair oracles model full within-bucket pairs: only comparable
     # while no bucket reaches the engine's star/salt tiers
     cfg = DedupConfig()
-    prof = hot_bucket_stats(_sig(spark, SF), cfg, id_col="doc_id").collect()[0]
-    assert prof["max_bucket"] <= cfg.bucket_star_cap
+    bands = explode_bands(_sig(spark, SF), "doc_id")
+    assert max_bucket_size(bands, ["band_id", "band_key"]) <= cfg.bucket_star_cap
 
     sdf = dict(ALL_QUERIES)[name](spark, SF)
     srows = sdf.collect()

@@ -77,6 +77,39 @@ def test_candidate_pairs_no_cartesian(spark):
     assert "Aggregate" in plan
 
 
+def _exchange_keys(plan: str) -> list[tuple[str, ...]]:
+    """The column lists of every hashpartitioning exchange, expression ids
+    and the partition count stripped."""
+    import re
+
+    return sorted(
+        tuple(re.sub(r"#\d+L?", "", c).strip() for c in cols.split(",")[:-1])
+        for cols in re.findall(r"Arguments: hashpartitioning\(([^)]*)\)", plan)
+    )
+
+
+def test_candidate_pairs_plan_pinned(spark):
+    """run_dedupe's candidate stage: with the hint (no hot bucket) one
+    bounded collect_list and no join; without it the stats join feeding
+    the small and salted collect_list tiers.  Exchange keys are the band
+    key shuffles plus the (id_a, id_b) n_bands aggregation."""
+    from image_deduplication_3m_images_spark.operators.lsh import candidate_pairs
+
+    cfg = DedupConfig()
+    df = spark.createDataFrame(
+        [(i, [1000 + b for b in range(cfg.bands)]) for i in range(10)],
+        "sid long, band_keys array<long>",
+    )
+    pair_keys = [("id_a", "id_b"), ("id_a", "id_b", "band_id")]
+    for hint, n_collect, join, n_band_shuffles in ((0, 1, False, 1), (None, 2, True, 6)):
+        plan = plan_of(candidate_pairs(df, cfg, id_col="sid", max_bucket_hint=hint))
+        assert plan.count("partial_collect_list") == n_collect, plan[:3000]
+        assert ("Join" in plan) == join
+        assert _exchange_keys(plan) == sorted(
+            [("band_id", "band_key")] * n_band_shuffles + pair_keys
+        ), plan[:3000]
+
+
 def test_signature_job_single_python_boundary(spark):
     fx = generate_pages(n_rows=50, seed=3)
     pages = pages_dataframe(spark, fx)

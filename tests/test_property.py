@@ -2,17 +2,20 @@
 
 The reference has no property testing (SURVEY.md §5); these go beyond it on
 the operators whose contracts are algebraic: the distributed prefix-sum
-must equal the sequential one for ANY input and ANY bucketing, and URL
+must equal the sequential one for ANY input and ANY bucketing, URL
 canonicalization must be idempotent and mirror its Python reference
-implementation.  Each example batches its rows into ONE Spark job so the
+implementation, and the skew-tiered bucket-pairs operator must agree with
+all-pairs-per-key in every tier.  Each example batches its rows into ONE Spark job so the
 suite stays fast.
 """
 
 from __future__ import annotations
 
+import io
 import re
+from contextlib import redirect_stdout
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
@@ -21,6 +24,10 @@ from image_deduplication_3m_images_spark.functions.text import (
 )
 from image_deduplication_3m_images_spark.operators.decontaminate import (
     word_ngrams_expr,
+)
+from image_deduplication_3m_images_spark.operators.lsh import (
+    bucket_pairs,
+    max_bucket_size,
 )
 from image_deduplication_3m_images_spark.operators.packing import (
     pack_documents,
@@ -138,3 +145,92 @@ def test_pages_distributed_bytes_are_pinned(spark):
         row["digest"]
         == "1956a9d634038c32347811bb6fbd76bf670e3c22fa5f3c1b810eb1997cbf8ed9"
     )
+
+
+# shrunk tier caps: buckets of <= 3 rows are small, 4-6 salted, > 6 star
+_CAP, _SALT = 3, 2
+
+
+def _components(edges, nodes):
+    parent = {v: v for v in nodes}
+
+    def find(v):
+        while parent[v] != v:
+            v = parent[v]
+        return v
+
+    for a, b in edges:
+        parent[find(a)] = find(b)
+    groups: dict = {}
+    for v in nodes:
+        groups.setdefault(find(v), set()).add(v)
+    return sorted(map(sorted, groups.values()))
+
+
+@settings(
+    max_examples=3,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    cases=st.lists(
+        st.lists(st.tuples(st.integers(0, 4), st.integers(0, 30)), max_size=40),
+        min_size=1,
+        max_size=8,
+    )
+)
+@example(
+    cases=[
+        [(0, 1), (0, 2), (1, 5)],  # no hot bucket: fast path
+        [(0, i) for i in range(2)] + [(1, i) for i in range(5)]
+        + [(2, i) for i in range(9)],  # one bucket per tier
+        [(0, 7), (0, 7), (0, 8), (1, 7)] * 2,  # repeated members
+    ]
+)
+def test_bucket_pairs_matches_brute_force(spark, cases):
+    """Exact mode = every pair sharing a key; salted mode = a subset with
+    the same components per key and every pair of a bucket <= cap; the
+    hinted fast path = the tiered plan, planned without a join.  Each
+    case's rows are keyed apart by a case column, so one Spark job per
+    mode checks every case of the example."""
+    rows = [(c, k, i) for c, case in enumerate(cases) for k, i in case]
+    keys = ["c", "k"]
+    df = spark.createDataFrame(rows, "c long, k long, id long")
+    members: dict = {}
+    size: dict = {}
+    for c, k, i in rows:
+        members.setdefault((c, k), set()).add(i)
+        size[(c, k)] = size.get((c, k), 0) + 1
+    model = {
+        (ck, a, b) for ck, ids in members.items() for a in ids for b in ids if a < b
+    }
+    assert max_bucket_size(df, keys) == max(size.values(), default=0)
+
+    def run(frame, salt, hint=None):
+        out = bucket_pairs(frame, keys, "id", _CAP, salt, hint)
+        got = sorted(((r["c"], r["k"]), r["a"], r["b"]) for r in out.collect())
+        assert all(a < b for _, a, b in got)
+        return out, got
+
+    exact = run(df, None)[1]
+    assert set(exact) == model
+
+    salted = run(df, _SALT)[1]
+    assert set(salted) <= model
+    for ck, ids in members.items():
+        edges = [(a, b) for kk, a, b in salted if kk == ck]
+        assert _components(edges, ids) == [sorted(ids)], ck
+        if size[ck] <= _CAP:
+            assert set(edges) == {(a, b) for kk, a, b in model if kk == ck}
+
+    # the fast path over the cases whose buckets all fit the cap
+    hot = {c for (c, _), n in size.items() if n > _CAP}
+    clean = [c for c in range(len(cases)) if c not in hot]
+    hint = max((n for (c, _), n in size.items() if c not in hot), default=0)
+    fast, got = run(df.where(F.col("c").isin(clean)), _SALT, hint)
+    for tiered in (exact, salted):
+        assert got == [p for p in tiered if p[0][0] not in hot]
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        fast.explain("formatted")
+    assert "Join" not in buf.getvalue()

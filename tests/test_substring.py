@@ -186,11 +186,10 @@ def test_remove_duplicated_spans_cuts_exactly(spark):
     assert got[3] == rows[2][1]        # loner untouched (JVM-only path)
 
 
-def test_hot_cap_star_tier_preserves_detection_and_connectivity(spark):
-    """A boilerplate string shared by 30 docs is one hot fingerprint bucket;
-    with hot_cap=5, pairs collapse to a star on the bucket min — every doc
-    must still be span-detected (against the min) and the component must
-    stay connected, while the pair count drops from O(n^2) to O(n)."""
+def test_boilerplate_bucket_keeps_exact_pairs_and_detection(spark):
+    """A boilerplate string shared by 30 docs is one big fingerprint
+    bucket: every pair of the 30 docs must come out, and every doc but the
+    first occurrence must be span-detected."""
     from image_deduplication_3m_images_spark.operators.substring import (
         duplicated_spans,
     )
@@ -202,18 +201,29 @@ def test_hot_cap_star_tier_preserves_detection_and_connectivity(spark):
     df = spark.createDataFrame(rows, "doc_id long, text string")
 
     exact = shared_substring_pairs(df, MIN_LEN).collect()
-    star = shared_substring_pairs(df, MIN_LEN, hot_cap=5).collect()
     assert len(exact) == 30 * 29 // 2
-    # winnow selection differs per doc, so hot buckets are SUBSETS with
-    # different mins — still O(n) star edges overall vs O(n^2) exact pairs
-    assert 29 <= len(star) <= len(exact) // 3
-    assert {r["id_a"] for r in star} | {r["id_b"] for r in star} == set(range(30))
 
-    spans = duplicated_spans(df, MIN_LEN, hot_cap=5).collect()
+    spans = duplicated_spans(df, MIN_LEN).collect()
     # every doc except the bucket min (first occurrence) is span-detected
     assert {r["doc_id"] for r in spans} == set(range(1, 30))
     for r in spans:
         assert r["span_len"] >= 80
+
+
+def test_repeated_doc_id_never_pairs_with_itself(spark):
+    """Two rows under one doc_id share their fingerprints; the id must not
+    come out paired with itself."""
+    rng = random.Random(31)
+    shared = _rand_text(rng, 60)
+    rows = [
+        (1, shared + _rand_text(rng, 20)),
+        (1, _rand_text(rng, 20) + shared),
+        (2, shared),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    got = [(r["id_a"], r["id_b"]) for r in shared_substring_pairs(df, MIN_LEN).collect()]
+    assert got and all(a != b for a, b in got)
+    assert set(got) == {(1, 2)}
 
 
 def test_fingerprint_density_and_determinism():

@@ -145,14 +145,19 @@ def main():
     # cap.  Fail loudly here instead of letting a fixture change silently
     # turn hash mismatches into a head-scratcher.
     from image_deduplication_3m_images_spark.config import DedupConfig
-    from image_deduplication_3m_images_spark.operators.lsh import hot_bucket_stats
+    from image_deduplication_3m_images_spark.operators.lsh import (
+        explode_bands,
+        max_bucket_size,
+    )
     from image_deduplication_3m_images_spark.plans.queries import _sig
 
     cfg = DedupConfig()
-    prof = hot_bucket_stats(_sig(spark, sf_dir), cfg, id_col="doc_id").collect()[0]
-    if prof["max_bucket"] > cfg.bucket_star_cap:
+    max_bucket = max_bucket_size(
+        explode_bands(_sig(spark, sf_dir), "doc_id"), ["band_id", "band_key"]
+    )
+    if max_bucket > cfg.bucket_star_cap:
         sys.exit(
-            f"FIXTURE INVALID FOR PARITY: max band bucket {prof['max_bucket']} "
+            f"FIXTURE INVALID FOR PARITY: max band bucket {max_bucket} "
             f"> bucket_star_cap {cfg.bucket_star_cap}; the engine would take "
             "the star/salt tiers while the DuckDB oracle models full "
             "within-bucket pairs. Shrink the fixture or raise the cap."
